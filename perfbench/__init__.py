@@ -1,0 +1,4 @@
+"""Seeded end-to-end and per-layer benchmark of arrow_zarr_spark.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``."""
