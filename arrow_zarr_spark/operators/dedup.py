@@ -22,7 +22,6 @@ Design for 100 TB (the reason each shape was chosen):
 
 from __future__ import annotations
 
-import os as _os
 from typing import Optional, Sequence
 
 import numpy as np
@@ -855,13 +854,9 @@ def canonical_docs(
 #: one union-find over two limit-collects instead of the ~4-jobs-per-
 #: round label-propagation loop (guide §5 — a dup-group graph this
 #: small IS driver metadata; profiled r14: the loop was ~1/3 of
-#: fuzzy_dedup_pipeline's job count). Env-tunable; 0 disables.
-CC_DRIVER_NODES_MAX = int(
-    _os.environ.get("SPARK_GRAFT_CC_DRIVER_NODES") or 65536
-)
-CC_DRIVER_PAIRS_MAX = int(
-    _os.environ.get("SPARK_GRAFT_CC_DRIVER_PAIRS") or 262144
-)
+#: fuzzy_dedup_pipeline's job count).
+CC_DRIVER_NODES_MAX = 65536
+CC_DRIVER_PAIRS_MAX = 262144
 
 #: integer id types for which python's ordering provably matches
 #: Spark's (the driver fast path computes min-id representatives in
@@ -957,7 +952,11 @@ def connected_components(
     ``CC_DRIVER_*_MAX`` caps, integer ids) skip the loop: two bounded
     limit-collects feed one driver-side union-find with min-id
     representatives — the same fixpoint, computed without the
-    per-round persist/probe job churn (r14, guide §5)."""
+    per-round persist/probe job churn (r14, guide §5).
+
+    Raises ``RuntimeError`` when the last of ``max_iterations`` rounds
+    still changed a label: those labels are not yet components, and a
+    graph that needs more rounds must not pass them off as final."""
     small = _cc_driver_components(nodes, pairs, id_col)
     if small is not None:
         return small
@@ -971,6 +970,7 @@ def connected_components(
         "component", F.col("id")
     ).persist()
     prev_cached = labels  # the persisted frame of the previous round
+    changed = True  # no round has yet shown a fixpoint
     try:
         for _ in range(max_iterations):
             neighbor_min = (
@@ -1009,6 +1009,13 @@ def connected_components(
             labels = new_cached.drop("changed")
             if not changed:
                 break
+        if changed:
+            prev_cached.unpersist()
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"max_iterations={max_iterations}: labels were still "
+                "changing in the last round (raise max_iterations)"
+            )
         # Hand back a self-contained result: checkpoint reads the still-
         # warm cache of the final round, then the cache entry is dropped
         # so repeated runs leave nothing pinned in the cache manager

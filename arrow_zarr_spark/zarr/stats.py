@@ -24,6 +24,13 @@ load only during a pruning pass, only for predicate columns — so
 un-filtered scans never touch the sidecar, and zarr.json stays
 planning-readable forever.
 
+What a write commits is decided in one place: :func:`build_entries`
+fills any ordinal range of an array's entry list from the pairs the
+write tasks computed, the old entries (through :class:`StatsPlan`'s
+ordinal remap when a grid grows along an axis) and the fill pair.
+Every writer runs it, over the whole list for inline stats and once
+per sidecar block past the cap (``io._publish_stats``).
+
 Soundness bar (same as inline stats): anything malformed — missing
 block, wrong reassembled length, non-list content — resolves to None
 and the reader treats the column as unknown. Bad stats may only ever
@@ -36,19 +43,28 @@ this whole layer is an extension, so the format is ours to define.
 from __future__ import annotations
 
 import json
-from typing import List, Optional
+from dataclasses import dataclass
+from typing import Dict, List, Optional, Tuple
 
 from .store import Store
 
 __all__ = [
     "STATS_BLOCK_ENTRIES",
     "STATS_SIDECAR_PREFIX",
+    "StatsPlan",
     "block_key",
+    "build_entries",
     "delete_sidecar",
     "is_sidecar_marker",
     "iter_stats_blocks",
+    "old_block",
+    "old_block_ids",
+    "old_entries",
     "resolve_stats",
+    "sidecar_marker",
     "store_stats",
+    "sweep_sidecar_tail",
+    "union_bounds",
 ]
 
 STATS_SIDECAR_PREFIX = "__stats__"
@@ -89,14 +105,190 @@ def delete_sidecar(store: Store, array_name: str) -> None:
         store.delete(key)
 
 
+def sidecar_marker(n_entries: int, block_entries: int) -> dict:
+    """The attribute value that points at ``n_entries`` entries stored
+    in blocks of ``block_entries``."""
+    return {
+        "sidecar": -(-n_entries // block_entries),
+        "n_entries": n_entries,
+        "block_entries": block_entries,
+    }
+
+
+def sweep_sidecar_tail(store: Store, array_name: str, n_blocks: int) -> None:
+    """Delete every block numbered ``n_blocks`` or higher: the tail a
+    larger (or torn) earlier sidecar left behind. The walk lists the
+    array's actual blocks, so unadvertised debris goes too; keys that
+    are not ``<int>.json`` blocks are left alone."""
+    prefix = f"{STATS_SIDECAR_PREFIX}/{array_name}/"
+    for key in list(store.walk_prefix(prefix)):
+        stem = key[len(prefix):]
+        if (
+            stem.endswith(".json")
+            and stem[:-5].isdigit()
+            and int(stem[:-5]) >= n_blocks
+        ):
+            store.delete(key)
+
+
+def union_bounds(entry, other):
+    """Union two encoded [lo, hi] pairs; unknown poisons."""
+    if not entry or not other or None in entry or None in other:
+        return None
+    return [min(entry[0], other[0]), max(entry[1], other[1])]
+
+
+@dataclass(frozen=True)
+class StatsPlan:
+    """The shape of one array's stats list after a write: its object
+    grid (entries run in C order), the pair a never-written object
+    takes (``fill`` — a scan materializes pure fill there), and, for
+    an append along ``axis``, how far the OLD stats reach: ``old_len``
+    positions in objects of ``cell`` positions along that axis. A fresh
+    write, an added column or a recompute keeps ``old_len=0``; a 1-D
+    table is the one-axis case, whose ordinal remap is the identity."""
+
+    grid: Tuple[int, ...]
+    fill: Optional[list] = None
+    axis: int = 0
+    old_len: int = 0
+    cell: int = 1
+
+    @property
+    def radix(self) -> Tuple[int, int, int]:
+        """(objects behind ``axis``, new count along it, old count)."""
+        behind = 1
+        for g in self.grid[self.axis + 1 :]:
+            behind *= int(g)
+        return behind, int(self.grid[self.axis]), -(-self.old_len // self.cell)
+
+    @property
+    def n(self) -> int:
+        out = 1
+        for g in self.grid:
+            out *= int(g)
+        return out
+
+    @property
+    def n_old(self) -> int:
+        _, g_new, g_old = self.radix
+        return self.n // g_new * g_old if g_new else 0
+
+    @property
+    def boundary(self) -> Optional[int]:
+        """Index along ``axis`` of the partial old object, if any: its
+        extension materializes fill, so its old bounds union with it."""
+        return self.old_len // self.cell if self.old_len % self.cell else None
+
+    @property
+    def first_changed(self) -> int:
+        """Every ordinal below this keeps its old entry unchanged."""
+        return (self.old_len // self.cell) * self.radix[0]
+
+    def locate(self, o: int) -> Tuple[Optional[int], bool]:
+        """(old ordinal or None for a new object, on the boundary)."""
+        behind, g_new, g_old = self.radix
+        rest, suffix = divmod(o, behind)
+        prefix, a = divmod(rest, g_new)
+        if a >= g_old:
+            return None, False
+        return (prefix * g_old + a) * behind + suffix, a == self.boundary
+
+    def new_ordinal(self, j: int) -> int:
+        """Where old ordinal ``j`` lands in the grown grid."""
+        behind, g_new, g_old = self.radix
+        rest, suffix = divmod(j, behind)
+        prefix, a = divmod(rest, g_old)
+        return (prefix * g_new + a) * behind + suffix
+
+
+def build_entries(
+    plan: StatsPlan, lo: int, hi: int, written: Dict[int, object],
+    old: Dict[int, object],
+) -> List:
+    """Entries for ordinals ``[lo, hi)`` of an array's committed stats
+    — the one per-slot rule every writer commits by:
+
+    - an object this call wrote takes the pair its task computed
+      (``written``);
+    - an old object takes its old entry through the ordinal remap
+      (``old``, keyed by OLD ordinal; missing = unknown, None);
+    - the partial boundary object unions that entry with the fill;
+    - a new object nobody wrote takes the fill pair."""
+    out: List = []
+    for o in range(lo, hi):
+        if o in written:
+            out.append(written[o])
+            continue
+        j, on_boundary = plan.locate(o)
+        if j is None:
+            out.append(plan.fill)
+        elif on_boundary:
+            out.append(union_bounds(old.get(j), plan.fill))
+        else:
+            out.append(old.get(j))
+    return out
+
+
+def _old_block_size(value, n_old: int) -> int:
+    """Entries per block of a recorded stats value that covers exactly
+    ``n_old`` objects (an inline list is one block), else 0: stale
+    stats are unknown, never a trusted prefix."""
+    if isinstance(value, list):
+        return max(n_old, 1) if len(value) == n_old else 0
+    if is_sidecar_marker(value) and value["n_entries"] == n_old:
+        return value["block_entries"]
+    return 0
+
+
+def old_block_ids(value, n_old: int, start: int = 0) -> range:
+    """Blocks of a recorded stats value that hold ordinals >= start."""
+    be = _old_block_size(value, n_old)
+    return range(start // be, -(-n_old // be)) if be else range(0)
+
+
+def old_block(
+    store: Store, array_name: str, value, n_old: int, b: int
+) -> Dict[int, object]:
+    """{old ordinal: entry} of block ``b`` of a recorded stats value;
+    empty when the block is missing, torn or the wrong length."""
+    be = _old_block_size(value, n_old)
+    lo = b * be
+    want = min(be, n_old - lo)
+    if isinstance(value, list):
+        part = value[lo : lo + want]
+    else:
+        raw = store.get(_block_key(array_name, b))
+        try:
+            part = json.loads(raw) if raw is not None else None
+        except ValueError:
+            part = None
+        if not isinstance(part, list) or len(part) != want:
+            return {}
+    return dict(zip(range(lo, lo + want), part))
+
+
+def old_entries(
+    store: Store, array_name: str, value, n_old: int, start: int = 0
+) -> Dict[int, object]:
+    """{old ordinal: entry} for every ordinal >= start of a recorded
+    stats value (see :func:`old_block`)."""
+    out: Dict[int, object] = {}
+    for b in old_block_ids(value, n_old, start):
+        out.update(old_block(store, array_name, value, n_old, b))
+    return out
+
+
 def store_stats(
     store: Store,
     array_name: str,
     entries: Optional[List],
     max_inline: int,
 ):
-    """Return the attribute value for ``entries``, writing sidecar
-    blocks when the list exceeds ``max_inline``.
+    """Return the attribute value for a complete ``entries`` list,
+    writing sidecar blocks when the list exceeds ``max_inline``
+    (writers commit through :func:`build_entries` instead, which
+    rewrites only the blocks a write touches).
 
     - ``entries is None`` → returns None (caller pops the attribute);
     - ``len(entries) <= max_inline`` → returns the list itself
@@ -124,11 +316,7 @@ def store_stats(
             _block_key(array_name, b),
             json.dumps(chunk).encode(),
         )
-    return {
-        "sidecar": n_blocks,
-        "n_entries": n,
-        "block_entries": STATS_BLOCK_ENTRIES,
-    }
+    return sidecar_marker(n, STATS_BLOCK_ENTRIES)
 
 
 def iter_stats_blocks(store: Store, array_name: str, marker):

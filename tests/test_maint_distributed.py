@@ -491,7 +491,6 @@ class TestRefreshStatsDistributed:
             )
             paths[name] = d
         n_serial = refresh_stats(spark, paths["serial"])
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 0)
         n_dist = refresh_stats(spark, paths["dist"])
         assert n_dist == n_serial > 0
         assert _store_bytes(paths["dist"]) == {
@@ -517,7 +516,6 @@ class TestRefreshStatsDistributed:
                 _table(spark, 0, 96), d, chunk_rows=16, stats=False
             )
         refresh_stats(spark, a)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 0)
         refresh_stats(spark, b)
         assert _store_bytes(b) == {
             k.replace(a, b): v for k, v in _store_bytes(a).items()
@@ -549,7 +547,6 @@ class TestRefreshStatsDistributed:
             _table(spark, 0, 160), d, chunk_rows=16, stats=False
         )  # 10 objects
         monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 0)
         monkeypatch.setattr(stats_mod, "STATS_BLOCK_ENTRIES", 2)
         assert refresh_stats(spark, d) == 20  # 10 objects x 2 columns
         store = open_store(d)
@@ -584,7 +581,6 @@ class TestRefreshStatsDistributed:
             _table(spark, 0, 160), d, chunk_rows=16, stats=False
         )  # 10 objects
         monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 0)
         monkeypatch.setattr(stats_mod, "STATS_BLOCK_ENTRIES", 8)
         store = open_store(d)
         # torn larger refresh: unadvertised tail blocks, NO marker

@@ -527,6 +527,21 @@ class TestConnectedComponents:
         }
         assert out == {i: i for i in range(5)}
 
+    def test_iteration_cap_raises_instead_of_partial_labels(
+        self, spark, monkeypatch
+    ):
+        """An 8-node chain needs 7 propagation rounds; capped at 3 the
+        loop used to return half-propagated labels as components."""
+        from arrow_zarr_spark.operators import dedup as dd
+
+        monkeypatch.setattr(dd, "CC_DRIVER_NODES_MAX", 0)
+        nodes = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(7)], ["id_a", "id_b"]
+        )
+        with pytest.raises(RuntimeError, match="max_iterations=3"):
+            dd.connected_components(nodes, pairs, max_iterations=3)
+
 
 class TestJaccardCandidateContract:
     def test_zero_shared_candidates_score_zero(self, spark):

@@ -248,7 +248,6 @@ class TestStatsObjectCap:
         )
 
         monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 4)
         path = str(tmp_path / "cap3b")
         rows = [
             (float(x), float(y), float(x * 10 + y))
@@ -914,7 +913,6 @@ class TestGridStats:
         rows = [r for r in rows if not (r[0] >= 6 and r[1] >= 6)]
         df = spark.createDataFrame(rows, ["x", "y", "v"])
         monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 4)
         monkeypatch.setattr(stats_mod, "STATS_BLOCK_ENTRIES", 6)
         write_zarr_grid(
             df, path, dims=["x", "y"], chunk_shape=(2, 2),
@@ -1059,7 +1057,6 @@ class TestRefreshStats:
         doc = json.loads(store.get("k/zarr.json"))
         doc["attributes"][STATS_ATTR_KEY] = [[900, 999]] * 6  # stale
         store.set("k/zarr.json", json.dumps(doc).encode())
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 4)
         assert refresh_stats(spark, path) == 6  # computed, not skipped
         after = infer_store_arrays(open_store(path))[0].meta.attributes
         assert after[STATS_ATTR_KEY] == [
@@ -1084,7 +1081,6 @@ class TestRefreshStats:
         df = spark.range(0, 800, 1, 4).select(F.col("id").alias("k"))
         write_zarr(df, path, chunk_rows=100, stats=False)
         monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
-        monkeypatch.setattr(io_mod, "STATS_GRID_MAX_OBJECTS", 0)
         assert refresh_stats(spark, path) == 8
         store = open_store(path)
         marker = infer_store_arrays(store)[0].meta.attributes[

@@ -13,6 +13,8 @@ answer.
 import json
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from arrow_zarr_spark.datasource import ZarrDataSource
@@ -388,6 +390,254 @@ class TestSoundnessProperty:
                 if vals["k"][i * 100 : (i + 1) * 100].max() > cut
             }
             assert must_keep <= kept, (scenario, cut)
+
+
+_TABLE_OP = st.tuples(
+    st.sampled_from(["append", "refresh"]),
+    st.integers(1, 14),  # rows appended
+    st.booleans(),  # stats
+    st.booleans(),  # driver fast path
+)
+_GRID_OP = st.tuples(
+    st.sampled_from(["append_t", "append_x", "add_column"]),
+    st.integers(1, 3),  # axis positions appended
+    st.booleans(),  # stats
+    st.integers(0, 2**16 - 1),  # which grid points the frame carries
+)
+
+
+class TestCommitProperty:
+    """Every writer commits stats through one builder: whatever the
+    sequence of creates, appends (1-D and both grid axes), added
+    columns and refreshes, on both sides of the inline cap and
+    through both the driver and the distributed path, every recorded
+    entry is either unknown (old data without stats) or EXACTLY the
+    [min, max] of its object, and no object the last call wrote is
+    unknown. Arrays no stats-less write ever touched have no unknown
+    entry at all, so an old entry the remap lost shows too."""
+
+    @staticmethod
+    def _check(store, written_last, may_be_unknown):
+        import itertools
+
+        import numpy as np
+
+        from arrow_zarr_spark.io import _block_stat_pair
+        from arrow_zarr_spark.zarr.array import ZarrArray
+
+        for a in infer_store_arrays(store):
+            m = a.meta
+            attr = m.attributes.get(STATS_ATTR_KEY)
+            if attr is None or m.is_coordinate():
+                continue
+            entries = resolve_stats(store, m.name, attr)
+            cells = list(
+                itertools.product(*(range(g) for g in m.chunk_grid_shape))
+            )
+            assert entries is not None and len(entries) == len(cells)
+            for o, idx in enumerate(cells):
+                block = np.asarray(
+                    ZarrArray(store, m).read_chunk(idx), dtype=m.dtype
+                )
+                if entries[o] is not None:
+                    assert entries[o] == _block_stat_pair(block, m), (
+                        m.name, idx,
+                    )
+                elif (
+                    (m.name, o) in written_last
+                    or m.name not in may_be_unknown
+                ):
+                    raise AssertionError(f"{m.name} object {o} unknown")
+
+    @settings(
+        max_examples=8,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        kind=st.sampled_from(["table", "grid"]),
+        n0=st.integers(1, 30),
+        stats0=st.booleans(),
+        table_ops=st.lists(_TABLE_OP, max_size=3),
+        grid_ops=st.lists(_GRID_OP, max_size=3),
+    )
+    def test_random_commit_sequences_exact_or_unknown(
+        self, spark, tmp_path, monkeypatch, kind, n0, stats0, table_ops,
+        grid_ops,
+    ):
+        import uuid
+
+        import arrow_zarr_spark.io as io_mod
+        import arrow_zarr_spark.zarr.stats as stats_mod
+        from arrow_zarr_spark.io import add_zarr_arrays, write_zarr_grid
+
+        monkeypatch.setattr(io_mod, "STATS_MAX_OBJECTS", 4)
+        monkeypatch.setattr(stats_mod, "STATS_BLOCK_ENTRIES", 3)
+        path = str(tmp_path / uuid.uuid4().hex)
+        if kind == "table":
+            chunk = 4
+
+            def frame(lo, hi):
+                return spark.range(lo, hi, 1, 2).select(
+                    F.col("id").alias("k"),
+                    (F.col("id") * 7 % 13).alias("v"),
+                )
+
+            write_zarr(frame(0, n0), path, chunk_rows=chunk, stats=stats0)
+            clean = stats0  # no stats-less write since the last refresh
+            n = n0
+            written = {(c, o) for c in "kv" for o in range(-(-n // chunk))}
+            written = written if stats0 else set()
+            for op, add, stats, driver in table_ops:
+                if op == "refresh":
+                    refresh_stats(spark, path)
+                    clean = True
+                    written = {
+                        (c, o) for c in "kv" for o in range(-(-n // chunk))
+                    }
+                    continue
+                monkeypatch.setattr(
+                    io_mod, "WRITE_DRIVER_ROWS_MAX", 65536 if driver else 0
+                )
+                write_zarr(
+                    frame(n, n + add), path, chunk_rows=chunk,
+                    mode="append", stats=stats,
+                )
+                written = {
+                    (c, o)
+                    for c in "kv"
+                    for o in range(n // chunk, -(-(n + add) // chunk))
+                } if stats else set()
+                clean = clean and stats
+                n += add
+            unknown_ok = set() if clean else {"k", "v"}
+            self._check(open_store(path), written, unknown_ok)
+            return
+
+        # grid: axes t (rows) x x (columns), 2x2 cells, sparse frames
+        # (cells no row reaches bound to the fill value)
+        t_len, x_len = 1 + n0 % 5, 1 + n0 // 6
+
+        def points(ts, xs, mask):
+            # every axis value appears (the writer derives the axes
+            # from the frame); the mask thins out the rest
+            pts = {(t, xs[0]) for t in ts} | {(ts[0], x) for x in xs}
+            for i, (t, x) in enumerate((t, x) for t in ts for x in xs):
+                if mask >> (i % 16) & 1:
+                    pts.add((t, x))
+            return sorted(pts)
+
+        def gframe(pts, col="v", mul=100):
+            return spark.createDataFrame(
+                [(float(t), float(x), float(t * mul + x)) for t, x in pts],
+                ["t", "x", col],
+            )
+
+        def cells(pts):
+            return {t // 2 * -(-x_len // 2) + x // 2 for t, x in pts}
+
+        pts = points(range(t_len), range(x_len), 0xB5AD)
+        write_zarr_grid(
+            gframe(pts), path, dims=("t", "x"), chunk_shape=(2, 2),
+            stats=stats0,
+        )
+        n_cells = -(-t_len // 2) * -(-x_len // 2)
+        written = {("v", o) for o in range(n_cells)} if stats0 else set()
+        clean = stats0
+        n_cols = 0
+        for op, add, stats, mask in grid_ops:
+            if op == "add_column":
+                col = f"q{n_cols}"
+                n_cols += 1
+                new = points(range(t_len), range(x_len), mask)
+                add_zarr_arrays(
+                    gframe(new, col=col, mul=-3), path, dims=["t", "x"],
+                    fill_value=-1,
+                )
+                written = {(col, o) for o in range(n_cells)}
+                continue
+            if n_cols:
+                continue  # appends must carry every data column
+            if op == "append_t":
+                ts, xs = range(t_len, t_len + add), range(x_len)
+                t_len += add
+            else:
+                ts, xs = range(t_len), range(x_len, x_len + add)
+                x_len += add
+            new = points(ts, xs, mask)
+            write_zarr_grid(
+                gframe(new), path, dims=("t", "x"), chunk_shape=(2, 2),
+                mode="append", append_dim=op[-1], stats=stats,
+            )
+            n_cells = -(-t_len // 2) * -(-x_len // 2)
+            written = {("v", o) for o in cells(new)} if stats else set()
+            clean = clean and stats
+        self._check(open_store(path), written, set() if clean else {"v"})
+
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        grid_old=st.lists(st.integers(1, 4), min_size=1, max_size=3),
+        data=st.data(),
+    )
+    def test_plan_remap_is_c_order_reindexing(self, grid_old, data):
+        """The builder's ordinal remap against brute-force C-order
+        indexing of the old and the grown grid."""
+        import itertools
+
+        from arrow_zarr_spark.zarr.stats import StatsPlan
+
+        axis = data.draw(st.integers(0, len(grid_old) - 1))
+        cell = data.draw(st.integers(1, 3))
+        old_len = data.draw(
+            st.integers((grid_old[axis] - 1) * cell + 1, grid_old[axis] * cell)
+        )
+        grid = list(grid_old)
+        grid[axis] += data.draw(st.integers(0, 3))
+        plan = StatsPlan(tuple(grid), axis=axis, old_len=old_len, cell=cell)
+        old_cells = list(itertools.product(*(range(g) for g in grid_old)))
+        new_cells = list(itertools.product(*(range(g) for g in grid)))
+        assert plan.n_old == len(old_cells) and plan.n == len(new_cells)
+        ordinal = {idx: o for o, idx in enumerate(new_cells)}
+        for j, idx in enumerate(old_cells):
+            assert plan.new_ordinal(j) == ordinal[idx]
+            on_edge = old_len % cell != 0 and idx[axis] == old_len // cell
+            assert plan.locate(ordinal[idx]) == (j, on_edge)
+        for idx in new_cells:
+            if idx[axis] >= grid_old[axis]:
+                assert plan.locate(ordinal[idx]) == (None, False)
+        # ordinals below first_changed keep their old entry in place:
+        # an append leaves those sidecar blocks as they are
+        for o in range(min(plan.first_changed, plan.n)):
+            assert plan.locate(o) == (o, False)
+
+    def test_refresh_mixes_inline_and_sidecar_arrays(
+        self, spark, tmp_path, small_caps
+    ):
+        """One refresh over arrays on both sides of the inline cap:
+        the short array's entries publish inline from the collected
+        prefix, the long one's as sidecar blocks built in tasks."""
+        import numpy as np
+
+        from arrow_zarr_spark.zarr import write_store
+
+        path = str(tmp_path / "mixed")
+        write_store(
+            path,
+            arrays={"a": np.arange(30) * 2, "b": np.arange(30)[::-1]},
+            chunk_shapes={"a": (10,), "b": (3,)},
+        )
+        assert refresh_stats(spark, path) == 3 + 10
+        store = open_store(path)
+        attrs = {
+            a.meta.name: a.meta.attributes[STATS_ATTR_KEY]
+            for a in infer_store_arrays(store)
+        }
+        assert attrs["a"] == [[0, 18], [20, 38], [40, 58]]
+        assert is_sidecar_marker(attrs["b"])
+        assert resolve_stats(store, "b", attrs["b"]) == [
+            [27 - 3 * i, 29 - 3 * i] for i in range(10)
+        ]
 
 
 class TestGridSidecar:
